@@ -27,16 +27,27 @@ import org.apache.spark.sql.SparkSession
   *    weak, deliberately: a weakly-held frame is cleared at the first
   *    GC after the query that used it returns, and a rebuild is NOT
   *    free — plans holding a `LogicalRDD` (the `zipWithIndex` dense-id
-  *    exports, the typed game pipeline) never canonicalize equal to
-  *    their previous incarnation, so the session `CacheManager` cannot
-  *    resurrect the materialized data and the whole build re-runs (a
-  *    measured 3.7 s → 15 s regression on the BFS query when this was
-  *    a `WeakReference`). A soft ref survives ordinary GC and is
-  *    cleared only under memory pressure, which bounds the worst case:
+  *    exports) or a typed closure (the game pipeline's stint fold)
+  *    never canonicalize equal to their previous incarnation, so the
+  *    session `CacheManager` cannot resurrect the materialized data and
+  *    the whole build re-runs (a measured 3.7 s → 15 s regression on
+  *    the BFS query when this was a `WeakReference`). A soft ref
+  *    survives ordinary GC and is cleared only under memory pressure,
+  *    which bounds the worst case:
   *    a dead session's frames linger at most until the heap needs the
   *    space, never to OOM. Values that provably do NOT reference the
   *    session (e.g. sink path strings) use [[onceStrong]] and are
   *    never re-built.
+  *
+  * The game pipeline's memo (`Domain.pipeline`) holds a
+  * [[graft.nba.GamePipeline.Result]] whose shared frames are cached
+  * LEAVES (`GraftBridge.cachedLeaf`): each frame's plan is its cache
+  * entry's `InMemoryRelation`, so the build analyzes each stage once
+  * instead of re-walking the lineage beneath it, and a query over the
+  * memo analyzes a few leaves. The leaves are lazy — building the memo
+  * runs no Spark job, and the first query that forces a frame fills it.
+  * A soft-cleared memo re-runs the build, which registers fresh leaves
+  * with the `CacheManager`.
   */
 object SessionCache {
 

@@ -112,10 +112,10 @@ object Edges {
     val runW = clockW.orderBy(col("action_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rows
-      .withColumn("prev_foul",
-        last(when(col("is_foul"), col("action_id")), ignoreNulls = true).over(runW))
-      .withColumn("first_foul",
-        min(when(col("is_foul"), col("action_id"))).over(clockW))
+      .select(col("*"),
+        last(when(col("is_foul"), col("action_id")), ignoreNulls = true).over(runW)
+          .as("prev_foul"),
+        min(when(col("is_foul"), col("action_id"))).over(clockW).as("first_foul"))
       .filter(!col("is_foul"))
       .select(col("game_id"), lit("CAUSED").as("rel_type"),
         coalesce(col("prev_foul"), col("first_foul")).as("src_action_id"),

@@ -92,44 +92,49 @@ object Events {
 
   /** Single-pass typed extraction (replaces reference F5's 8 dispatch
     * masks): flag columns per family, the full multi-label type system
-    * (shot styles + subtype labels), FT attempt parse, points. */
+    * (shot styles + subtype labels), FT attempt parse, points. One
+    * projection over the filter — 8 base columns, then the 14 style
+    * flags, then the 31 label flags, in that order — so the plan stays
+    * two nodes deep however many labels there are. Derived columns are
+    * referenced as expressions (a projection cannot see its own
+    * aliases); codegen's subexpression elimination evaluates each shared
+    * one once per row. */
   def enriched(pbp: DataFrame): DataFrame = {
     val t = col("action_type")
-    val base = pbp
-      .filter(t =!= "substitution" && t =!= "period")
-      .withColumn("is_shot", t.isin("2pt", "3pt"))
-      .withColumn("is_made", col("shot_result") === "Made")
-      .withColumn("is_freethrow", t === "freethrow")
-      .withColumn("ft_attempt",
-        when(col("is_freethrow"),
-          split(coalesce(col("sub_type"), lit("")), " ").getItem(0).cast("int")))
-      // "1 of 2" parse (C3, game.py:435-439): total attempts + last-attempt
-      .withColumn("ft_total",
-        when(col("is_freethrow") && coalesce(col("sub_type"), lit("")).contains(" of "),
-          split(col("sub_type"), " ").getItem(2).cast("int")))
-      .withColumn("is_last_ft",
-        coalesce(col("is_freethrow") && col("ft_attempt") === col("ft_total"),
-          lit(false)))
-      .withColumn("points",
-        when(t === "2pt" && col("is_made"), 2)
-          .when(t === "3pt" && col("is_made"), 3)
-          .when(col("is_freethrow") && col("is_made"), 1)
-          .otherwise(0))
+    val subType = coalesce(col("sub_type"), lit(""))
+    val descriptor = coalesce(col("descriptor"), lit(""))
+    val isShot = t.isin("2pt", "3pt")
+    val isMade = col("shot_result") === "Made"
+    val isFreethrow = t === "freethrow"
+    val ftAttempt = when(isFreethrow, split(subType, " ").getItem(0).cast("int"))
+    // "1 of 2" parse (C3, game.py:435-439): total attempts + last-attempt
+    val ftTotal = when(isFreethrow && subType.contains(" of "),
+      split(col("sub_type"), " ").getItem(2).cast("int"))
+    val base = Seq(
+      isShot.as("is_shot"),
+      isMade.as("is_made"),
+      isFreethrow.as("is_freethrow"),
+      ftAttempt.as("ft_attempt"),
+      ftTotal.as("ft_total"),
+      coalesce(isFreethrow && ftAttempt === ftTotal, lit(false)).as("is_last_ft"),
+      when(t === "2pt" && isMade, 2)
+        .when(t === "3pt" && isMade, 3)
+        .when(isFreethrow && isMade, 1)
+        .otherwise(0).as("points"),
       // FT synthetic +100ms-per-attempt tie-break (reference game.py:446)
-      .withColumn("order_clock",
-        col("global_clock") +
-          when(col("ft_attempt").isNotNull, col("ft_attempt") * 0.1).otherwise(0.0))
-    val withStyles = shotStyleLabels.foldLeft(base) { case (df, (flag, needle)) =>
-      df.withColumn(flag,
-        col("is_shot") && coalesce(col("descriptor"), lit("")).contains(needle))
+      (col("global_clock") +
+        when(ftAttempt.isNotNull, ftAttempt * 0.1).otherwise(0.0)).as("order_clock"))
+    val styles = shotStyleLabels.map { case (flag, needle) =>
+      (isShot && descriptor.contains(needle)).as(flag)
     }
-    labelRules.foldLeft(withStyles) { case (df, r) =>
-      val subHit = r.subEq.foldLeft(lit(false))((acc, v) =>
-        acc || coalesce(col("sub_type"), lit("")) === v)
-      val descHit = r.descEq.foldLeft(lit(false))((acc, v) =>
-        acc || coalesce(col("descriptor"), lit("")) === v)
-      df.withColumn(r.flag, t === r.family && (subHit || descHit))
+    val labels = labelRules.map { r =>
+      val subHit = r.subEq.foldLeft(lit(false))((acc, v) => acc || subType === v)
+      val descHit = r.descEq.foldLeft(lit(false))((acc, v) => acc || descriptor === v)
+      (t === r.family && (subHit || descHit)).as(r.flag)
     }
+    pbp
+      .filter(t =!= "substitution" && t =!= "period")
+      .select(col("*") +: (base ++ styles ++ labels): _*)
   }
 
   /** Timeline priority (reference W6 table, game.py:749-759). */
@@ -149,9 +154,9 @@ object Events {
   def timeline(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("game_id"))
       .orderBy(col("order_clock"), typePriority, col("action_id"))
-    events
-      .withColumn("seq", row_number().over(w))
-      .withColumn("next_action_id", lead(col("action_id"), 1).over(w))
+    events.select(col("*"),
+      row_number().over(w).as("seq"),
+      lead(col("action_id"), 1).over(w).as("next_action_id"))
   }
 
   /** Attribute events to the acting team's live lineup stint (J5): as-of

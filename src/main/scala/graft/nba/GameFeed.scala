@@ -96,41 +96,40 @@ object GameFeed {
   def base(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables(spark, sfDir, "events")
     val wGame = Window.partitionBy(col("game_id")).orderBy(col("ts"), col("event_id"))
+    val home = col("game_id") % 4 + 1
+    val away = (col("game_id") + 1) % 4 + 1
+    val even = col("event_id") % 2 === 0
     ev.select(
         col("user_id").as("game_id"), col("event_id"), col("event_type"),
         col("value"), col("ts"))
-      .withColumn("home_team_id", col("game_id") % 4 + 1)
-      .withColumn("away_team_id", (col("game_id") + 1) % 4 + 1)
-      .withColumn("team_id",
-        when(col("event_id") % 2 === 0, col("home_team_id"))
-          .otherwise(col("away_team_id")))
-      .withColumn("opp_id",
-        when(col("event_id") % 2 === 0, col("away_team_id"))
-          .otherwise(col("home_team_id")))
-      // 45 s steps put long games (>64 events) past the 2880 s regulation
-      // horizon, so the OT tiling is exercised at every scale factor;
-      // rebounds land 5 s after the previous event (clock - 40) so the
-      // reference's 10 s rebound->missed-shot window has real matches
-      .withColumn("clock",
-        row_number().over(wGame).cast("double") * 45.0 -
+      .select(col("*"),
+        home.as("home_team_id"),
+        away.as("away_team_id"),
+        when(even, home).otherwise(away).as("team_id"),
+        when(even, away).otherwise(home).as("opp_id"),
+        // 45 s steps put long games (>64 events) past the 2880 s
+        // regulation horizon, so the OT tiling is exercised at every
+        // scale factor; rebounds land 5 s after the previous event
+        // (clock - 40) so the reference's 10 s rebound->missed-shot
+        // window has real matches
+        (row_number().over(wGame).cast("double") * 45.0 -
           when(col("event_type") === "error" && col("value") < 100.0, 40.0)
-            .otherwise(0.0))
-      // running count of this team's signups, inclusive: the swap ordinal
-      // k. Each game has exactly two teams (home = even event ids), so
-      // the per-(game, team) count rides the per-GAME window as two
-      // conditional running sums — same trick as the streaming twin's
-      // (kHome, kAway) state — instead of a second full shuffle of the
-      // events table on (game_id, team_id). All three window functions in
-      // this frame (clock row_number + the two sums) share one window
-      // spec, so the whole derivation is a single Exchange + Sort +
-      // WindowExec at any scale.
-      .withColumn("k",
-        when(col("event_id") % 2 === 0,
-          sum(when(col("event_type") === "signup" && col("event_id") % 2 === 0,
-            1L).otherwise(0L)).over(wGame))
+            .otherwise(0.0)).as("clock"),
+        // running count of this team's signups, inclusive: the swap
+        // ordinal k. Each game has exactly two teams (home = even event
+        // ids), so the per-(game, team) count rides the per-GAME window
+        // as two conditional running sums — same trick as the streaming
+        // twin's (kHome, kAway) state — instead of a second full shuffle
+        // of the events table on (game_id, team_id). All three window
+        // functions in this frame (clock row_number + the two sums)
+        // share one window spec, so the whole derivation is a single
+        // Exchange + Sort + WindowExec at any scale.
+        when(even,
+          sum(when(col("event_type") === "signup" && even, 1L).otherwise(0L))
+            .over(wGame))
           .otherwise(
-            sum(when(col("event_type") === "signup" && col("event_id") % 2 =!= 0,
-              1L).otherwise(0L)).over(wGame)))
+            sum(when(col("event_type") === "signup" && !even, 1L).otherwise(0L))
+              .over(wGame)).as("k"))
   }
 
   private def periodOf(clock: Column): Column =
@@ -231,25 +230,24 @@ object GameFeed {
     // game_end = max clock + 45 — Periods.fromPbp derives bounds from these
     val tileStart = graft.ops.TimeKernel.periodStartOffset(col("p"))
     val tileEnd = graft.ops.TimeKernel.periodStartOffset(col("p") + 1)
+    val pid = -(col("p") * 2).cast("long")
     val periodRows = b.groupBy(col("game_id"))
       .agg(max(col("clock")).as("max_clock"))
-      .withColumn("game_end", col("max_clock") + 45.0)
-      .withColumn("n_periods", periodOf(col("max_clock")))
-      .withColumn("p", explode(sequence(lit(1), col("n_periods"))))
+      .select(col("game_id"),
+        (col("max_clock") + 45.0).as("game_end"),
+        periodOf(col("max_clock")).as("n_periods"),
+        explode(sequence(lit(1), periodOf(col("max_clock")))).as("p"))
       // structurally disjoint keyspace: period bracket rows get NEGATIVE,
       // per-game action ids (start = -2p, end = -2p-1). Event rows are
       // always non-negative (event_id*4 + j), so no event volume can ever
       // collide — the stream's key is the (game_id, action_id) composite,
       // same as every other row kind
-      .withColumn("pid", -(col("p") * 2).cast("long"))
-      .withColumn("start_clock", tileStart)
-      .withColumn("end_clock",
-        when(col("p") < col("n_periods"), tileEnd).otherwise(col("game_end")))
-      .withColumn("r", explode(array(
-        struct(col("pid").as("action_id"), lit("start").as("sub_type"),
-          col("start_clock").as("global_clock")),
-        struct((col("pid") - 1).as("action_id"), lit("end").as("sub_type"),
-          col("end_clock").as("global_clock")))))
+      .select(col("game_id"), col("p"), explode(array(
+        struct(pid.as("action_id"), lit("start").as("sub_type"),
+          tileStart.as("global_clock")),
+        struct((pid - 1).as("action_id"), lit("end").as("sub_type"),
+          when(col("p") < col("n_periods"), tileEnd).otherwise(col("game_end"))
+            .as("global_clock")))).as("r"))
       .select(
         col("game_id"), col("r.action_id"), col("p").as("period"),
         col("r.global_clock"), lit("period").as("action_type"),
@@ -268,8 +266,9 @@ object GameFeed {
   def gameTeams(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables(spark, sfDir, "events")
       .select(col("user_id").as("game_id")).distinct()
-      .withColumn("home_team_id", col("game_id") % 4 + 1)
-      .withColumn("away_team_id", (col("game_id") + 1) % 4 + 1)
+      .select(col("game_id"),
+        (col("game_id") % 4 + 1).as("home_team_id"),
+        ((col("game_id") + 1) % 4 + 1).as("away_team_id"))
 
   /** Starters: players i = 0..4 of each side. */
   def starters(spark: SparkSession, sfDir: String): Dataset[Starter] = {
@@ -290,6 +289,7 @@ object GameFeed {
     graft.Tables(spark, sfDir, "events")
       .groupBy(col("user_id").as("game_id"))
       .agg(min(col("ts")).as("game_time"))
-      .withColumn("home_team_id", col("game_id") % 4 + 1)
-      .withColumn("away_team_id", (col("game_id") + 1) % 4 + 1)
+      .select(col("*"),
+        (col("game_id") % 4 + 1).as("home_team_id"),
+        ((col("game_id") + 1) % 4 + 1).as("away_team_id"))
 }

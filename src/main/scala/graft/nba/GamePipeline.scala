@@ -2,6 +2,7 @@ package graft.nba
 
 import graft.nba.Model._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.GraftBridge.cachedLeaf
 import org.apache.spark.sql.functions._
 
 /** End-to-end game pipeline (reference §3.2 `load_game`, re-expressed as
@@ -28,41 +29,47 @@ object GamePipeline {
       starters: Dataset[Starter],
       gameTeams: DataFrame): Result = {
 
-    // the raw action stream is scanned by FOUR independent consumers
-    // (periods, sub events, enrichment/attribution, rebound links /
-    // timeline) — cache it once instead of re-deriving it from the
-    // source per consumer. Enriched events are NOT cached separately:
-    // enrichment is map-only (flag columns), so recomputing it over the
-    // cached stream is a pipelined pass with no shuffle.
+    // Caching discipline: every frame read by more than one consumer is
+    // cached as a LEAF (`GraftBridge.cachedLeaf`) — its plan is the cache
+    // entry's InMemoryRelation, not its lineage. Each DataFrame call
+    // re-analyzes the whole logical tree beneath it, so over a plainly
+    // `cache()`d frame every later step would re-walk the pipeline back
+    // to the feed scan; over leaves each step analyzes one stage. Lineage
+    // stays in the relation (lost blocks recompute, `clearCache()` frees
+    // them).
+    // Enriched events are NOT cached: enrichment is one map-only
+    // projection, so recomputing it over the cached stream is a
+    // pipelined pass with no shuffle.
     import spark.implicits._
-    val pbpDf = pbp.toDF().cache()
+    // the raw action stream: four consumers (periods, sub events,
+    // enrichment/attribution, rebound links / timeline)
+    val pbpDf = cachedLeaf(pbp.toDF())
     val pbpDs = pbpDf.as[PbpAction]
 
     // 0. periods pipeline (A1/A2): bounds derived from PBP period events —
     //    the game end clock every stint tiling closes on is DERIVED, never
-    //    a fixture input (reference manager:126-135)
-    // cached: tiny (games × ~4 rows), but each uncached reference would
-    // re-derive it from a full pbp scan (q66 + two export branches)
-    val periods = Periods.fromPbp(pbpDf).cache()
+    //    a fixture input (reference manager:126-135). Tiny (games × ~4
+    //    rows), but read by the stint tiling, q66 and two export branches
+    val periods = cachedLeaf(Periods.fromPbp(pbpDf))
     val gameEnd = Periods.gameBounds(periods)
       .select(col("game_id"), col("game_end_clock"))
 
     // 1. stint engine (W4 fold + W2 tiling + W3 sessionization)
     val subs = Stints.subEvents(spark, pbpDs)
     val snapshots = Stints.lineupSnapshots(spark, starters, subs)
-    val lineupStints = Stints.lineupStints(snapshots, gameEnd).cache()
-    val playerStints = Stints.playerStints(lineupStints).cache()
+    val lineupStints = cachedLeaf(Stints.lineupStints(snapshots, gameEnd))
+    val playerStints = cachedLeaf(Stints.playerStints(lineupStints))
 
     // 2. event extraction + attribution (F5 single pass, J5/J6 as-of)
     val events = Events.enriched(pbpDf)
-    val attributed = Events.attributeToOpponentStints(
+    val attributed = cachedLeaf(Events.attributeToOpponentStints(
       Events.attributeToStints(events, lineupStints),
-      lineupStints, gameTeams).cache()
+      lineupStints, gameTeams))
 
-    // 3. scores + plus-minus (A6/W7 windows, A7/A8 roll-ups)
-    // chain is consumed by the score query, the season invariant and the
-    // streaming twin's oracle — cache the 1-row-per-score frame
-    val chain = Scores.scoreChain(attributed, gameTeams).cache()
+    // 3. scores + plus-minus (A6/W7 windows, A7/A8 roll-ups); the
+    // 1-row-per-score chain feeds the score query, the season invariant
+    // and the streaming twin's oracle
+    val chain = cachedLeaf(Scores.scoreChain(attributed, gameTeams))
     val stintPm = Scores.stintPlusMinus(attributed, lineupStints)
     val playerPm = Scores.playerPlusMinus(playerStints, stintPm)
 

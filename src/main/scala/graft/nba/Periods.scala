@@ -20,25 +20,24 @@ import org.apache.spark.sql.functions._
 object Periods {
 
   /** Period bounds + labels + NEXT chain from raw PBP period rows.
-    * Output: (game_id, period, period_id, start_clock, end_clock, label,
+    * Output: (game_id, period, start_clock, end_clock, period_id, label,
     * is_overtime, next_period_id, time_delta). */
   def fromPbp(pbp: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("game_id")).orderBy(col("period"))
+    val periodId = TimeKernel.compositeKey(col("game_id"), col("period"))
     pbp
       .filter(col("action_type") === "period")
       .groupBy(col("game_id"), col("period"))
       .agg(
         min(col("global_clock")).as("start_clock"),
         max(col("global_clock")).as("end_clock"))
-      .withColumn("period_id",
-        TimeKernel.compositeKey(col("game_id"), col("period")))
-      .withColumn("label",
+      .select(col("*"),
+        periodId.as("period_id"),
         when(col("period") <= 4, concat(lit("Q"), col("period")))
-          .otherwise(lit("OT")))
-      .withColumn("is_overtime", col("period") > 4)
-      .withColumn("next_period_id", lead(col("period_id"), 1).over(w))
-      .withColumn("time_delta",
-        lead(col("start_clock"), 1).over(w) - col("start_clock"))
+          .otherwise(lit("OT")).as("label"),
+        (col("period") > 4).as("is_overtime"),
+        lead(periodId, 1).over(w).as("next_period_id"),
+        (lead(col("start_clock"), 1).over(w) - col("start_clock")).as("time_delta"))
   }
 
   /** Game roll-up (A2, game.py:35-40): start = min period start, end =

@@ -26,10 +26,11 @@ object Scores {
     val scoring = events
       .filter(col("points") > 0)
       .join(gameTeams, Seq("game_id"))
-      .withColumn("home_pts",
-        when(col("team_id") === col("home_team_id"), col("points")).otherwise(0))
-      .withColumn("away_pts",
-        when(col("team_id") === col("away_team_id"), col("points")).otherwise(0))
+      .select(col("*"),
+        when(col("team_id") === col("home_team_id"), col("points")).otherwise(0)
+          .as("home_pts"),
+        when(col("team_id") === col("away_team_id"), col("points")).otherwise(0)
+          .as("away_pts"))
     val ord = Seq(col("order_clock"), col("action_id"))
     val wGame = Window.partitionBy(col("game_id")).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -60,12 +61,15 @@ object Scores {
       .filter(col("points") > 0 && col("opp_lineup_stint_id").isNotNull)
       .groupBy(col("opp_lineup_stint_id").as("stint_id"))
       .agg(sum(col("points")).as("pts_against"))
-    lineupStints
+    val ptsFor = coalesce(col("pts_for"), lit(0L))
+    val ptsAgainst = coalesce(col("pts_against"), lit(0L))
+    val joined = lineupStints
       .join(forPts, Seq("stint_id"), "left_outer")
       .join(againstPts, Seq("stint_id"), "left_outer")
-      .withColumn("pts_for", coalesce(col("pts_for"), lit(0L)))
-      .withColumn("pts_against", coalesce(col("pts_against"), lit(0L)))
-      .withColumn("plus_minus", col("pts_for") - col("pts_against"))
+    // the stint columns, then the two sides (nulls → 0) and their margin
+    joined.select(joined.columns.toSeq.filterNot(Set("pts_for", "pts_against")).map(col) ++
+      Seq(ptsFor.as("pts_for"), ptsAgainst.as("pts_against"),
+        (ptsFor - ptsAgainst).as("plus_minus")): _*)
   }
 
   /** Player-stint plus-minus: the hierarchical roll-up (A8,

@@ -70,8 +70,9 @@ object Stints {
   def lineupStints(snapshots: Dataset[LineupSnapshot], gameEndClock: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("game_id"), col("team_id")).orderBy(col("global_clock"))
     snapshots.toDF()
-      .withColumn("stint_index", row_number().over(w) - 1)
-      .withColumn("next_start", lead(col("global_clock"), 1).over(w))
+      .select(col("*"),
+        (row_number().over(w) - 1).as("stint_index"),
+        lead(col("global_clock"), 1).over(w).as("next_start"))
       .join(gameEndClock, Seq("game_id")) // (game_id, game_end_clock)
       .select(
         col("game_id"), col("team_id"),
@@ -96,20 +97,23 @@ object Stints {
     val w = Window.partitionBy(col("game_id"), col("person_id"))
       .orderBy(col("start_clock"))
     val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // a run id is the running count of run starts, so it is a window over
+    // the lagged window: two projections (window functions do not nest)
+    val isNew =
+      when(col("prev_end").isNull || col("start_clock") > col("prev_end"), 1L)
+        .otherwise(0L)
     exploded
-      .withColumn("prev_end", lag(col("end_clock"), 1).over(w))
-      .withColumn("is_new",
-        when(col("prev_end").isNull || col("start_clock") > col("prev_end"), 1L)
-          .otherwise(0L))
-      .withColumn("run_id", sum(col("is_new")).over(cum))
+      .select(col("*"), lag(col("end_clock"), 1).over(w).as("prev_end"))
+      .select(col("*"), sum(isNew).over(cum).as("run_id"))
       .groupBy(col("game_id"), col("team_id"), col("person_id"), col("run_id"))
       .agg(
         min(col("start_clock")).as("start_clock"),
         max(col("end_clock")).as("end_clock"),
         count(lit(1)).as("n_lineup_stints"),
         collect_list(col("stint_id")).as("stint_ids"))
-      .withColumn("player_stint_id",
-        TimeKernel.compositeKey(col("game_id"), col("person_id"), col("run_id")))
+      .select(col("*"),
+        TimeKernel.compositeKey(col("game_id"), col("person_id"), col("run_id"))
+          .as("player_stint_id"))
   }
 
   /** The `ON_COURT_NEXT` / stint `NEXT` chains (reference W1,

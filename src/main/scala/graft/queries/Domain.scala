@@ -23,12 +23,13 @@ object Domain {
 
   private[graft] def pipeline(s: SparkSession, dir: String): GamePipeline.Result =
     graft.SessionCache.once(s, s"domain#$dir#pipeline") {
-      // cached: the tiny game->teams dim is referenced by attribution, the
-      // season invariant and four export branches — and Spark's cache
-      // manager resolves every identical GameFeed.gameTeams plan to this
-      // one InMemoryRelation
+      // cached as a leaf (GamePipeline.run's discipline): the tiny
+      // game->teams dim is referenced by attribution, the season
+      // invariant and four export branches — and Spark's cache manager
+      // resolves every identical GameFeed.gameTeams plan to this one
+      // InMemoryRelation
       GamePipeline.run(s, GameFeed.pbp(s, dir), GameFeed.starters(s, dir),
-        GameFeed.gameTeams(s, dir).cache())
+        org.apache.spark.sql.GraftBridge.cachedLeaf(GameFeed.gameTeams(s, dir)))
     }
 
   /** Shared oracle CTEs mirroring GameFeed's mapping: the derived event
@@ -1293,13 +1294,13 @@ object Domain {
     * engines run the identical truncating-division recurrence, so the
     * gate is exact — no float drift across iteration order). */
   private val PprScale = 1000000000000L
+  private val PprRestart = PprScale * 15 / 100 / 3 // teleport mass per seed
 
   private def pprOracle: String = {
-    val restart = PprScale * 15 / 100 / 3 // teleport mass per seed
     val steps = (1 to PprIters).map { k =>
       s"""pr$k AS (
          |  SELECT v.id,
-         |    CAST(CASE WHEN sd.id IS NOT NULL THEN $restart ELSE 0 END
+         |    CAST(CASE WHEN sd.id IS NOT NULL THEN $PprRestart ELSE 0 END
          |      + COALESCE(m.inc, 0) AS BIGINT) AS s
          |  FROM verts v LEFT JOIN seeds sd ON sd.id = v.id
          |  LEFT JOIN (
@@ -1348,7 +1349,8 @@ object Domain {
     * Scale shape: each round is ONE equi-join of the edge frame against
     * the O(V) score frame plus a partial-agg sum on dst; the edge frame
     * and out-weights build once and cache. No driver-side iteration
-    * state (the loop composes a 3-deep plan), no windows, nothing
+    * state (each [[pprRound]] is checkpointed, so the composed plan stays
+    * one round deep), no windows, nothing
     * quadratic: exactly GraphX Pregel's cost model expressed in
     * DataFrames.
     */
@@ -1382,30 +1384,41 @@ object Domain {
       val seeds = verts.orderBy(col("id")).limit(3).localCheckpoint()
       val outw = co.groupBy(col("src")).agg(sum(col("w")).as("tw"))
       val edges = co.join(outw, Seq("src")).localCheckpoint()
-      val restart = PprScale * 15 / 100 / 3
-      def withSeed(v: DataFrame): DataFrame =
-        v.join(broadcast(seeds.select(col("id"), lit(1).as("sd"))), Seq("id"), "left")
-      var scores = withSeed(verts)
+      var scores = pprWithSeed(verts, seeds)
         .select(col("id"),
           when(col("sd").isNotNull, lit(PprScale / 3)).otherwise(lit(0L))
             .cast("long").as("s"))
-      for (_ <- 1 to PprIters) {
-        val inc = edges
-          .join(scores.select(col("id").as("src"), col("s")), Seq("src"))
-          .select(col("dst"),
-            expr("(s * 85 * w) div (100 * tw)").as("msg"))
-          .groupBy(col("dst"))
-          .agg(sum(col("msg")).cast("long").as("inc"))
-        scores = withSeed(verts)
-          .join(inc.select(col("dst").as("id"), col("inc")), Seq("id"), "left")
-          .select(col("id"),
-            (when(col("sd").isNotNull, lit(restart)).otherwise(lit(0L))
-              + coalesce(col("inc"), lit(0L))).cast("long").as("s"))
-          .localCheckpoint()
-      }
-      withSeed(scores)
+      for (_ <- 1 to PprIters)
+        scores = pprRound(edges, verts, seeds, scores).localCheckpoint()
+      pprWithSeed(scores, seeds)
         .select(col("id").as("person_id"), col("s").as("ppr"),
           col("sd").isNotNull.as("is_seed"))
+  }
+
+  /** `v` with a nullable `sd` flag set on the seed ids; the seed frame
+    * (3 rows) always rides a broadcast. */
+  private def pprWithSeed(v: DataFrame, seeds: DataFrame): DataFrame =
+    v.join(broadcast(seeds.select(col("id"), lit(1).as("sd"))), Seq("id"), "left")
+
+  /** One synchronous PPR round, pre-checkpoint: `edges` (src, dst, w, tw)
+    * ⋈ `scores` (id, s) on src, a partial-aggregated message sum on dst,
+    * then the teleport share re-injected at the broadcast seeds. Factored
+    * out so PlanSpec can pin the per-round physical shape — the
+    * checkpointed composition is an opaque `Scan ExistingRDD` by design,
+    * exactly like q85's `relaxRound` and q202's `lpaRound`. */
+  private[graft] def pprRound(edges: DataFrame, verts: DataFrame, seeds: DataFrame,
+      scores: DataFrame): DataFrame = {
+    val inc = edges
+      .join(scores.select(col("id").as("src"), col("s")), Seq("src"))
+      .select(col("dst"),
+        expr("(s * 85 * w) div (100 * tw)").as("msg"))
+      .groupBy(col("dst"))
+      .agg(sum(col("msg")).cast("long").as("inc"))
+    pprWithSeed(verts, seeds)
+      .join(inc.select(col("dst").as("id"), col("inc")), Seq("id"), "left")
+      .select(col("id"),
+        (when(col("sd").isNotNull, lit(PprRestart)).otherwise(lit(0L))
+          + coalesce(col("inc"), lit(0L))).cast("long").as("s"))
   }
 
   val all: Seq[Q] =

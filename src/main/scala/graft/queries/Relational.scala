@@ -5167,8 +5167,8 @@ object Relational {
       // combination explodes with partial-aggregated counts — the previous
       // spelling self-joined the (o, it) frame twice (pairs) and three
       // times (triples) on o, shuffling the fan-out each time (plan:
-      // 5 Exchanges on o → 1 Exchange building the array; bench net
-      // 11.8 s → see OPTIMIZATION_r11.md)
+      // 5 Exchanges on o → 1 Exchange building the array; subset A/B
+      // 9.87 → 7.89 s, plan captures in plans/r11/q248_apriori_triples_*)
       val arr = graft.SessionCache.once(s, s"relational#$dir#apriori-baskets") {
         Tables(s, dir, "lineitem")
           .select(col("l_orderkey").as("o"), col("l_partkey"))

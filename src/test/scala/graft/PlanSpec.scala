@@ -677,14 +677,38 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q207: PPR rounds are equi-joins with partial-agg message sums; seeds broadcast") {
-    val p = plan("q207_personalized_pagerank")
+    // each round is localCheckpointed, so the composed q207 plan reads the
+    // last round through an opaque Scan ExistingRDD; the round shape is
+    // pinned on one pre-checkpoint round over a synthetic graph, exactly
+    // like q85's relaxRound and q202's lpaRound
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 3L, 4L), (2L, 1L, 3L, 3L), (1L, 3L, 1L, 4L))
+      .toDF("src", "dst", "w", "tw")
+    val verts = Seq(1L, 2L, 3L).toDF("id")
+    val seeds = Seq(1L).toDF("id")
+    val scores = Seq((1L, 100L), (2L, 0L), (3L, 0L)).toDF("id", "s")
+    // size-based broadcasting off, so a BroadcastHashJoin can only come
+    // from the seed join's hint, not from the tiny synthetic inputs
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val p =
+      try queries.Domain.pprRound(edges, verts, seeds, scores)
+        .queryExecution.explainString(FormattedMode)
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
-      s"PPR fell off the equi-join path:\n$p")
+      s"PPR round fell off the equi-join path:\n$p")
     // each round's incoming-mass sum must map-side combine, and the
     // 3-row seed frame must ride a broadcast, never a shuffle
     assert(p.contains("partial_sum"), s"message sum not partial-aggregated:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"seed join not broadcast:\n$p")
+    // and the composed query stays off the non-equi paths end to end,
+    // with its final seed flag still a broadcast join
+    val pq = plan("q207_personalized_pagerank")
+    assert(!pq.contains("CartesianProduct") &&
+      !pq.contains("BroadcastNestedLoopJoin"),
+      s"composed q207 fell off the equi-join path:\n$pq")
+    assert(pq.contains("BroadcastHashJoin"), s"composed seed join not broadcast:\n$pq")
   }
 
   test("q211: NN-descent candidates are wedge equi-joins; ranking re-enters by key") {

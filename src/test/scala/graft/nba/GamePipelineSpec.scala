@@ -1,6 +1,8 @@
 package graft.nba
 
 import graft.SparkTestSession
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -162,5 +164,73 @@ class GamePipelineSpec extends AnyFunSuite {
     val b = again.lineupStints.select("stint_id", "lineup_id", "start_clock", "end_clock")
       .collect().map(_.toSeq).toSet
     assert(a == b)
+  }
+
+  test("cached Result frames are InMemoryRelation leaves, not their lineage") {
+    // every later DataFrame call analyzes the frame's whole logical tree;
+    // a leaf keeps that one node however deep the pipeline beneath it
+    Seq("periods" -> result.periods, "lineupStints" -> result.lineupStints,
+      "playerStints" -> result.playerStints,
+      "attributedEvents" -> result.attributedEvents,
+      "scoreChain" -> result.scoreChain).foreach { case (name, df) =>
+      val analyzed = df.queryExecution.analyzed
+      assert(analyzed.isInstanceOf[InMemoryRelation] && analyzed.children.isEmpty,
+        s"$name is not a cached leaf:\n${analyzed.treeString}")
+    }
+  }
+
+  test("enriched events: pinned schema, one projection over the filter") {
+    val pbp = Fixture.pbp(spark).toDF()
+    val e = Events.enriched(pbp)
+    val base = Seq("is_shot" -> "boolean", "is_made" -> "boolean",
+      "is_freethrow" -> "boolean", "ft_attempt" -> "int", "ft_total" -> "int",
+      "is_last_ft" -> "boolean", "points" -> "int", "order_clock" -> "double")
+    val flags = Seq("style_driving", "style_pullup", "style_fadeaway",
+      "style_step_back", "style_alley_oop", "style_reverse", "style_turnaround",
+      "style_bank", "style_floating", "style_finger_roll", "style_putback",
+      "style_tip", "style_cutting", "style_running",
+      "foul_personal", "foul_offensive", "foul_technical", "foul_flagrant",
+      "foul_shooting", "foul_loose_ball", "foul_take", "foul_def_3_sec",
+      "foul_charge", "rebound_offensive", "rebound_defensive",
+      "violation_kicked_ball", "violation_delay_of_game", "violation_lane",
+      "violation_goaltending", "violation_defensive_goaltending",
+      "violation_double_dribble", "violation_jump_ball", "turnover_bad_pass",
+      "turnover_lost_ball", "turnover_traveling", "turnover_out_of_bounds",
+      "turnover_offensive_foul", "turnover_shot_clock", "turnover_step",
+      "timeout_full", "timeout_short", "jumpball_recovered",
+      "jumpball_startperiod", "jumpball_heldball", "jumpball_unclearpass")
+    val expected = pbp.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq ++
+      base ++ flags.map(_ -> "boolean")
+    assert(e.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq == expected)
+    e.queryExecution.analyzed match {
+      case Project(_, Filter(_, child)) =>
+        assert(child == pbp.queryExecution.analyzed,
+          s"enrichment is more than one projection:\n${e.queryExecution.analyzed.treeString}")
+      case other => fail(s"expected one Project over the Filter:\n${other.treeString}")
+    }
+  }
+
+  test("clearCache -> rebuild cycles neither leak nor strand persisted RDDs") {
+    // the leaves keep their lineage in the relation, so `clearCache()`
+    // still frees every block, and a rebuilt pipeline persists the same
+    // number of RDDs as the last one. clearCache() empties the cache of
+    // every session in the JVM, so this suite runs in a JVM of its own
+    // (build.sbt's testGrouping).
+    val sc = spark.sparkContext
+    val perPass = (1 to 3).map { _ =>
+      spark.catalog.clearCache()
+      val s = spark.newSession()
+      // built as Domain.pipeline builds it, game->teams dim a leaf too;
+      // forcing the stint plus-minus (q60's frame) fills the leaves it reads
+      val p = GamePipeline.run(s, Fixture.pbp(s), Fixture.starters(s),
+        org.apache.spark.sql.GraftBridge.cachedLeaf(Fixture.gameTeams(s)))
+      graft.Force(p.stintPlusMinus)
+      sc.getPersistentRDDs.size
+    }
+    assert(perPass.head > 0, "forcing the plus-minus filled no cached frame")
+    assert(perPass.forall(_ == perPass.head), s"persisted RDDs grew: $perPass")
+    spark.catalog.clearCache()
+    assert(sc.getPersistentRDDs.isEmpty,
+      s"${sc.getPersistentRDDs.size} persisted RDDs survive clearCache()")
   }
 }
